@@ -1,7 +1,7 @@
 # Quality gates for the maup_spark engine.  MUST run from the repo root
 # (Spark workers import maup_spark from the driver cwd).
 
-.PHONY: gate test audit bench
+.PHONY: gate test audit bench loc
 
 # The pre-snapshot gate (judge r4 task 10): every registered driver
 # query vs its DuckDB oracle at BOTH parallelisms — local[8] and the
@@ -18,3 +18,7 @@ audit:
 
 bench:
 	python bench.py
+
+# Code-only LoC (no blanks, comments or docstrings) per package directory.
+loc:
+	python scripts/loc.py

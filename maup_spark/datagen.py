@@ -51,17 +51,14 @@ KNOCKOUT = 7  # cells with (di + dj) % 7 == 0 do not exist
 # source rectangle half-extents
 RX, RY = 1.5, 1.0
 
-def points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ENT_K geotagged entities per document (maup's "blocks" role).
+def entity_points(docs: DataFrame) -> DataFrame:
+    """ENT_K geotagged entities per document row (maup's "blocks" role):
+    (entity_id, doc_id, lon, lat, n_chars).  Shared by the batch and
+    streaming paths, so both compute the same coordinates.
 
     The explode is a JVM-side ``sequence`` — no Python in the fan-out.
     """
-    # the documents file is a single small parquet -> one scan partition;
-    # spread it across the cluster BEFORE the 64× entity fan-out so every
-    # downstream map stage (rect build, cover explode, refine) parallelizes
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n_part = spark.sparkContext.defaultParallelism
-    return docs.repartition(n_part).selectExpr(
+    return docs.selectExpr(
         "doc_id", f"explode(sequence(0, {ENT_K - 1})) AS k", "n_chars"
     ).selectExpr(
         f"doc_id * {ENT_K} + k AS entity_id",
@@ -70,6 +67,16 @@ def points(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{LAT_SQL.replace('entity_id', f'(doc_id * {ENT_K} + k)')} AS lat",
         "n_chars",
     )
+
+
+def points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``entity_points`` over the documents table."""
+    # the documents file is a single small parquet -> one scan partition;
+    # spread it across the cluster BEFORE the 64× entity fan-out so every
+    # downstream map stage (rect build, cover explode, refine) parallelizes
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    n_part = spark.sparkContext.defaultParallelism
+    return entity_points(docs.repartition(n_part))
 
 
 def points_oracle_cte() -> str:

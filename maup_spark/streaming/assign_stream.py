@@ -3,7 +3,7 @@ extraction → district assignment → windowed rollups.
 
 The reference is strictly batch (no streaming surface anywhere in
 /root/reference/maup); this module is the web-scale ingest edge the
-graft adds: a ``readStream`` over the pages landing zone, the same
+graft adds: a stream over the pages landing zone, the same
 deterministic entity extraction used in batch (pure JVM expressions),
 and per-microbatch assignment via ``foreachBatch`` — which reuses the
 *batch* ``assign_points`` operator verbatim, so streaming and batch
@@ -16,26 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..datagen import ENT_K, LAT_SQL, LON_SQL
-
-
-def streaming_points(spark: SparkSession, source_dir: str, schema: str) -> DataFrame:
-    """readStream over a parquet landing zone of documents → entity
-    points (same arithmetic as the batch path)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(source_dir)
-    )
-    return stream.selectExpr(
-        "doc_id", f"explode(sequence(0, {ENT_K - 1})) AS k", "n_chars"
-    ).selectExpr(
-        f"doc_id * {ENT_K} + k AS entity_id",
-        "doc_id",
-        f"{LON_SQL.replace('entity_id', f'(doc_id * {ENT_K} + k)')} AS lon",
-        f"{LAT_SQL.replace('entity_id', f'(doc_id * {ENT_K} + k)')} AS lat",
-        "n_chars",
-    )
+from ..datagen import entity_points
+from .harness import run_available_now
 
 
 def streaming_assign_counts(
@@ -50,8 +32,6 @@ def streaming_assign_counts(
     """Per-microbatch assignment + per-district counts appended to a
     parquet sink.  Returns the StreamingQuery (caller awaits)."""
     from ..operators.assign import assign_points
-
-    pts = streaming_points(spark, source_dir, schema)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -70,11 +50,8 @@ def streaming_assign_counts(
             .parquet(output_dir)
         )
 
-    return (
-        pts.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, source_dir, schema, checkpoint_dir, entity_points, handle_batch
     )
 
 
@@ -94,24 +71,11 @@ def streaming_windowed_events(
     stream — the engine's late-data surface.  Append mode: a window is
     emitted once the watermark passes it (exactly-once via checkpoint).
     """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(source_dir)
-    )
-    agg = (
-        stream.withWatermark("ts", watermark)
+    return run_available_now(
+        spark, source_dir, schema, checkpoint_dir,
+        lambda s: s.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("win"), F.col("event_type"))
         .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("win.start").alias("win_start"), "event_type", "n_events"
-        )
-    )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .select(F.col("win.start").alias("win_start"), "event_type", "n_events"),
+        output_dir,
     )

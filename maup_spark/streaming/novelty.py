@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions.dedup import N_BANDS, N_MINHASH, SHINGLE
 from ..functions.grams import gram_array_sql
+from .harness import run_available_now
 
 
 def minhash_sig_cols(text_col: str = "text") -> list:
@@ -241,23 +242,20 @@ def streaming_novelty(
     schema: str = "doc_id bigint, ts timestamp, text string",
     watermark: str = "1 hour",
     text_col: str = "text",
-    max_files_per_trigger: int = 1,
 ):
     """availableNow streaming novelty filter: emits the (doc_id, ts) of
     docs sharing no LSH band with anything seen within the watermark
     horizon.  Band-key state is evicted by event time; the per-doc
     band count runs in ``foreachBatch`` (exact — a doc's bands share
     its micro-batch), writing parquet per batch."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    bands = _band_rows(stream, text_col).withWatermark("ts", watermark)
-    survivors = bands.dropDuplicatesWithinWatermark(["band", "key"])
-    short = _short_docs(stream, text_col).select(
-        "doc_id", "ts", F.lit(-1).alias("band")
-    )
+
+    def first_band_carriers(stream: DataFrame) -> DataFrame:
+        bands = _band_rows(stream, text_col).withWatermark("ts", watermark)
+        survivors = bands.dropDuplicatesWithinWatermark(["band", "key"])
+        short = _short_docs(stream, text_col).select(
+            "doc_id", "ts", F.lit(-1).alias("band")
+        )
+        return survivors.select("doc_id", "ts", "band").unionByName(short)
 
     def emit(batch: DataFrame, batch_id: int) -> None:
         novel = (
@@ -274,13 +272,7 @@ def streaming_novelty(
         )
         novel.unionByName(novel_short).write.mode("append").parquet(output_dir)
 
-    merged = survivors.select("doc_id", "ts", "band").unionByName(
-        short.select("doc_id", "ts", "band")
-    )
-    return (
-        merged.writeStream.outputMode("append")
-        .foreachBatch(emit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, source_dir, schema, checkpoint_dir, first_band_carriers, emit,
+        files_per_trigger=1,
     )

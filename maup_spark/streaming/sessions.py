@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .harness import run_available_now
+
 SESSION_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -154,13 +156,9 @@ def streaming_sessionize(
 ):
     """Stateful sessionization stream -> parquet sink of CLOSED sessions.
     Returns the StreamingQuery (caller awaits)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    sessions = (
-        stream.withWatermark("ts", watermark)
+    return run_available_now(
+        spark, source_dir, schema, checkpoint_dir,
+        lambda s: s.withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
             _make_session_fn(gap_seconds),
@@ -168,13 +166,7 @@ def streaming_sessionize(
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    return (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        output_dir,
+        files_per_trigger=1,
     )

@@ -21,6 +21,16 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture
+def cache_entries(spark):
+    """Callable returning the number of relations in the session's
+    CacheManager (``cachedData`` has no public size accessor)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return lambda: int(field.get(cm).size())
+
+
 def sq_wkb(x0, y0, x1, y1):
     from maup_spark.geom.base import Geometry
 

@@ -168,9 +168,10 @@ def test_profile_table_nulls_and_approx(spark):
 def test_strategy_parity_hot_groups(spark):
     """The round-5 skew-safe "agg" twins must equal the window shape
     exactly, including on a HOT group (one key holding most rows) —
-    normalize, disaggregate_by_weight, dedup_batch."""
+    normalize, disaggregate_by_weight; dedup_batch (agg only) must pick
+    the hot group's minimum (ts, doc_id)."""
     from maup_spark.operators.normalize import normalize
-    from maup_spark.streaming.dedup_stream import dedup_batch
+    from maup_spark.streaming.twins import dedup_batch
 
     rows = [(1, i, float(i % 7) + 1.0) for i in range(400)]  # hot target 1
     rows += [(t, 1000 + t, 2.5) for t in range(2, 12)]
@@ -211,6 +212,7 @@ def test_strategy_parity_hot_groups(spark):
          for i in range(330)],
         "doc_id bigint, ts double, text string",
     ).selectExpr("doc_id", "CAST(ts AS TIMESTAMP) AS ts", "text")
-    a = sorted(tuple(r) for r in dedup_batch(docs, strategy="agg").collect())
-    b = sorted(tuple(r) for r in dedup_batch(docs, strategy="window").collect())
-    assert a == b and len(a) == 31  # 1 winner for the hot text + 30 uniques
+    got = dedup_batch(docs).collect()
+    assert len(got) == 31  # 1 winner for the hot text + 30 uniques
+    # the hot text's winner is the minimum (ts, doc_id) = (0, 0)
+    assert [r["doc_id"] for r in got if r["text"] == "same text"] == [0]

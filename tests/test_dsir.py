@@ -152,11 +152,11 @@ class TestPlanShape:
         assert "Window" not in plan
 
 
-def test_streaming_dsir_filter_matches_batch(spark, tmp_path):
+def test_streaming_dsir_filter_matches_batch(spark, tmp_path, cache_entries):
     """Streaming DSIR (stateless foreachBatch over a static ratio
     table): surviving doc set equals the batch score-and-threshold,
     independent of micro-batch boundaries."""
-    from maup_spark.streaming.dsir_stream import streaming_dsir_filter
+    from maup_spark.streaming.twins import streaming_dsir_filter
 
     target = spark.createDataFrame(
         [(10_000, "alpha beta gamma delta"), (10_001, "alpha beta quick fox")],
@@ -178,6 +178,7 @@ def test_streaming_dsir_filter_matches_batch(spark, tmp_path):
     src = str(tmp_path / "dsirsrc")
     docs.repartition(4).write.parquet(src)
 
+    n_cached = cache_entries()
     q = streaming_dsir_filter(
         spark,
         src,
@@ -188,6 +189,7 @@ def test_streaming_dsir_filter_matches_batch(spark, tmp_path):
         n_buckets=B,
     )
     q.awaitTermination(240)
+    assert cache_entries() == n_cached  # the twin leaves no cached relation
 
     got = {
         r["doc_id"]
@@ -249,12 +251,12 @@ def test_merge_gram_counts_additive(spark):
     assert merged == want
 
 
-def test_streaming_lm_filter_matches_batch(spark, tmp_path):
+def test_streaming_lm_filter_matches_batch(spark, tmp_path, cache_entries):
     """Streaming LM filter (stateless foreachBatch over a static
     vocab): surviving doc set equals the batch keep-head/middle rule,
     independent of micro-batch boundaries."""
     from maup_spark.functions.lm import lm_score, lm_train
-    from maup_spark.streaming.lm_stream import streaming_lm_filter
+    from maup_spark.streaming.twins import streaming_lm_filter
 
     docs = spark.range(100).selectExpr(
         "id AS doc_id",
@@ -270,6 +272,7 @@ def test_streaming_lm_filter_matches_batch(spark, tmp_path):
     src = str(tmp_path / "lmsrc")
     docs.repartition(4).write.parquet(src)
 
+    n_cached = cache_entries()
     q = streaming_lm_filter(
         spark,
         src,
@@ -279,6 +282,7 @@ def test_streaming_lm_filter_matches_batch(spark, tmp_path):
         keep_buckets=("head", "middle"),
     )
     q.awaitTermination(240)
+    assert cache_entries() == n_cached  # the twin leaves no cached relation
 
     got = {
         r["doc_id"]

@@ -80,7 +80,7 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
     """Extraction is stateless, so the batch operator composes directly
     onto the stream: file-sink output must be byte-equal to the batch
     extraction of the same pages."""
-    from maup_spark.streaming.extract_stream import streaming_extract_text
+    from maup_spark.streaming.twins import streaming_extract_text
 
     pages = web_pages(spark, SF)
     src = str(tmp_path / "pagesrc")

@@ -106,7 +106,7 @@ def test_streaming_dedup_matches_batch(spark, tmp_path):
     business in both engines, so the gate compares fingerprint sets)."""
     from pyspark.sql import functions as F
 
-    from maup_spark.streaming.dedup_stream import dedup_batch, streaming_dedup
+    from maup_spark.streaming.twins import dedup_batch, streaming_dedup
 
     docs = spark.range(300).selectExpr(
         "id AS doc_id",
@@ -248,8 +248,7 @@ def test_streaming_profile_merges_to_batch_exact(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from maup_spark.streaming.profile_stream import (read_merged_profile,
-                                                     streaming_profile)
+    from maup_spark.streaming.twins import read_merged_profile, streaming_profile
 
     src = str(tmp_path / "src")
     os.makedirs(src)

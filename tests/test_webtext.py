@@ -210,7 +210,7 @@ def test_streaming_crawl_dedup_matches_batch(spark, tmp_path):
     every canonical URL survives exactly once and the surviving canonical
     set equals the batch twin's (url_dedup); which raw-url representative
     survives is arrival-order business in the stream."""
-    from maup_spark.streaming.crawl_stream import streaming_crawl_dedup
+    from maup_spark.streaming.twins import streaming_crawl_dedup
 
     crawl = spark.range(300).selectExpr(
         "CASE WHEN id % 3 = 0"
@@ -386,13 +386,11 @@ def test_canonicalize_idempotent_over_url_grammar(spark):
     assert noisy == []
 
 
-def test_streaming_decontaminate_matches_batch(spark, tmp_path):
+def test_streaming_decontaminate_matches_batch(spark, tmp_path, cache_entries):
     """Streaming decontamination (stateless foreachBatch over a static
     benchmark): surviving doc set equals the batch operator's filter at
     the same tau, independent of micro-batch boundaries."""
-    from maup_spark.streaming.contamination_stream import (
-        streaming_decontaminate,
-    )
+    from maup_spark.streaming.twins import streaming_decontaminate
 
     bench = spark.createDataFrame(
         [(10_000, "alpha beta gamma delta epsilon zeta")],
@@ -411,6 +409,7 @@ def test_streaming_decontaminate_matches_batch(spark, tmp_path):
     src = str(tmp_path / "decsrc")
     docs.repartition(4).write.parquet(src)
 
+    n_cached = cache_entries()
     q = streaming_decontaminate(
         spark,
         src,
@@ -421,6 +420,7 @@ def test_streaming_decontaminate_matches_batch(spark, tmp_path):
         n=3,
     )
     q.awaitTermination(240)
+    assert cache_entries() == n_cached  # the twin leaves no cached relation
 
     got = {r["doc_id"] for r in
            spark.read.parquet(str(tmp_path / "decout")).select("doc_id").collect()}
@@ -557,7 +557,7 @@ def test_streaming_pii_scrub_matches_batch(spark, tmp_path):
     directly onto the stream: file-sink output must be byte-equal to
     the batch scrub of the same rows."""
     from maup_spark.functions.webtext import pii_scrub
-    from maup_spark.streaming.pii_stream import streaming_pii_scrub
+    from maup_spark.streaming.twins import streaming_pii_scrub
 
     docs = spark.range(120).selectExpr(
         "id AS doc_id",
