@@ -80,29 +80,6 @@ def aggregate_by_assignment(
     )
 
 
-def _shares(assignment, weight_col, target_id, strategy):
-    """Per-row share of the group-sum of ``weight_col`` within
-    ``target_id`` — hash-agg + join-back ("agg", hot-group safe) or
-    window sum ("window", single exchange)."""
-    if strategy == "agg":
-        sums = assignment.groupBy(target_id).agg(
-            F.sum(weight_col).alias("__wsum")
-        )
-        return (
-            assignment.join(sums, target_id)
-            .withColumn("__share", F.col(weight_col) / F.col("__wsum"))
-            .drop("__wsum")
-        )
-    if strategy != "window":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(target_id)
-    return assignment.withColumn(
-        "__share", F.col(weight_col) / F.sum(weight_col).over(w)
-    )
-
-
 def disaggregate_by_weight(
     targets: DataFrame,
     assignment: DataFrame,
@@ -110,7 +87,6 @@ def disaggregate_by_weight(
     weight_col: str,
     source_id: str = "source_id",
     target_id: str = "target_id",
-    strategy: str = "agg",
 ) -> DataFrame:
     """Split target ``columns`` down to assigned sources proportionally
     to ``weight_col`` within each target (the README's prorate-by-
@@ -118,14 +94,15 @@ def disaggregate_by_weight(
     no geometry work; use ``prorate`` when the weight IS the
     intersection area.
 
-    ``strategy="window"``: single-exchange window sum, right when
-    per-target fan-in is bounded.  ``strategy="agg"`` (default):
-    groupBy(target).sum + join-back — at web scale one target district
-    can hold millions of assigned docs, and a window would serialize
-    that whole group into one task while the hash agg combines it
-    map-side (AQE skew-splits the join-back; it can never split a
-    window partition).  Identical output (parity-tested)."""
-    shares = _shares(assignment, weight_col, target_id, strategy)
+    The per-target weight sum is a groupBy(target) aggregation joined
+    back, not a window: at web scale one target district can hold
+    millions of assigned docs, and a window would serialize that whole
+    group into one task while the hash agg combines it map-side (AQE
+    skew-splits the join-back; it can never split a window partition)."""
+    sums = assignment.groupBy(target_id).agg(F.sum(weight_col).alias("__wsum"))
+    shares = assignment.join(sums, target_id).withColumn(
+        "__share", F.col(weight_col) / F.col("__wsum")
+    )
     out = shares.join(targets.select(target_id, *columns), target_id)
     return out.select(
         source_id,

@@ -17,7 +17,6 @@ def normalize(
     level: str = "source_id",
     weight_col: str = "weight",
     out_col: str | None = None,
-    strategy: str = "window",
 ) -> DataFrame:
     """Divide each weight by the sum of weights sharing ``level``.
 
@@ -26,37 +25,12 @@ def normalize(
     yields ±inf (pandas fillna(0) only replaces NaN, NOT inf); 0/0
     yields 0.
 
-    ``strategy="window"`` (default): one window sum — one shuffle, none
-    if the input is already hash-partitioned on the level key; group
-    sizes are bounded by geometric fan-in in the intersections use.
-    ``strategy="agg"``: groupBy(level).sum + join-back for DEGENERATE
-    fan-in (one source overlapping millions of targets — e.g. a
-    country-wide layer against parcels): the sum combines map-side and
-    the join-back is AQE skew-split-eligible, where a window would put
-    the whole group in one task.  Identical output (parity-tested).
+    One window sum — one shuffle, none if the input is already
+    hash-partitioned on the level key; group sizes are bounded by
+    geometric fan-in in the intersections use.
     """
     out_col = out_col or weight_col
     wcol = F.col(weight_col)
-    if strategy == "agg":
-        denoms = weights.groupBy(level).agg(
-            F.sum(F.when(~F.isnan(wcol), wcol)).alias("__denom")
-        )
-        joined = weights.join(denoms, level)
-        denom = F.col("__denom")
-        ratio = (
-            F.when(
-                denom == 0,
-                F.when(wcol > 0, F.lit(float("inf")))
-                .when(wcol < 0, F.lit(float("-inf")))
-                .otherwise(F.lit(0.0)),
-            ).otherwise(F.coalesce(F.nanvl(wcol / denom, F.lit(0.0)), F.lit(0.0)))
-        )
-        out_cols = list(weights.columns)
-        if out_col not in out_cols:
-            out_cols.append(out_col)
-        return joined.withColumn(out_col, ratio).select(*out_cols)
-    if strategy != "window":
-        raise ValueError(f"unknown strategy {strategy!r}")
     w = Window.partitionBy(level)
     # pandas groupby().sum() skips NaN, Spark's propagates it — mask first
     denom = F.sum(F.when(~F.isnan(wcol), wcol)).over(w)

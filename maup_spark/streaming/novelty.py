@@ -35,7 +35,7 @@ different batches (the test drives one file per trigger).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dedup import N_BANDS, N_MINHASH, SHINGLE
@@ -108,20 +108,11 @@ def _short_docs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.filter(F.size(F.split(F.col(text_col), " ")) < SHINGLE)
 
 
-# auto-strategy switch points: a band key is "hot" when it alone would
-# serialize a window-sort task — ratio vs the mean key population AND an
-# absolute floor so tiny corpora (where even 50× ratios are 50 rows)
-# never pay the agg path's two extra joins
-NOVELTY_SKEW_RATIO = 32.0
-NOVELTY_SKEW_MIN_MAX = 5_000
-
-
-def novelty_batch(
-    docs: DataFrame, text_col: str = "text", strategy: str = "auto"
-) -> DataFrame:
+def novelty_batch(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Batch twin: a doc is novel iff it is the strict first arrival
-    (min ts, then min doc_id) of EVERY one of its band keys.  Returns
-    the novel (doc_id, ts) rows.
+    (min ts, then min doc_id; a NULL ts ranks first, as ``ORDER BY ts``
+    does) of EVERY one of its band keys.  Returns the novel (doc_id, ts)
+    rows.
 
     Signatures come from the batch hash-agg (whole-stage-codegen md5,
     ~3× the throughput of the interpreted per-row HOF at 10^6 docs);
@@ -129,31 +120,15 @@ def novelty_batch(
     are byte-identical by construction and parity-gated in
     tests/test_streaming.py.
 
-    Two first-arrival strategies, identical output (parity-tested):
-    ``"window"`` — ROW_NUMBER over (band, key): one exchange
-    + per-partition sort; measured FASTER at 10^6 docs (23.2 s vs
-    27.3 s steady) because band keys there are nearly all distinct, so
-    sort partitions are tiny and the agg path's two extra band-row
-    joins dominate.  ``"agg"`` — two chained HASH aggregations (min
-    ts, then min doc_id among min-ts ties; mutable-buffer mins with
-    map-side partial combine): the shape for corpora with HOT band
-    keys (corpus-wide boilerplate), where a single key's rows would
-    serialize into one window-sort task at 10^12 scale but hash aggs
-    reduce them map-side before the exchange.
-
-    ``"auto"`` (default) measures instead of guessing (the
-    ``minhash_lsh_pairs`` ``strategy="auto"`` precedent): persist the
-    band rows, run one ``telemetry.skew_report`` hash-agg over the
-    band keys (bounded scalar collect — the components-probe idiom),
-    and take the agg path iff the heaviest key is both
-    ``NOVELTY_SKEW_RATIO``× the mean AND over the
-    ``NOVELTY_SKEW_MIN_MAX`` absolute floor.  The probe costs one
-    map-side-combined agg over rows that both strategies consume
-    anyway (persisted, so the explode isn't recomputed); a
-    boilerplate-heavy crawl flips to the skew-robust shape with no
-    manual tuning."""
-    from pyspark.storagelevel import StorageLevel
-
+    One aggregation finds every band key's winner: ``min(struct(ts,
+    doc_id))`` per (band, key) combines map-side before the exchange (a
+    struct min has an immutable buffer, so Spark plans it as a
+    sort-based aggregate, but still with the partial min first), so a
+    hot band key (corpus-wide boilerplate) is reduced per partition
+    instead of funneling its rows into one task.  Every signed doc has
+    exactly ``N_BANDS`` distinct (band, key) rows, so a doc is novel iff
+    it is the winner of ``N_BANDS`` groups — a count over the winners,
+    with no window, no join back to the band rows and no cache."""
     from ..functions.dedup import minhash_signatures
 
     sigs = minhash_signatures(docs, text_col)
@@ -165,73 +140,18 @@ def novelty_batch(
         ]
     )
     bands = signed.select(
-        "doc_id", "ts", F.posexplode(keys).alias("band", "key")
+        F.struct("ts", "doc_id").alias("__a"),
+        F.posexplode(keys).alias("band", "key"),
     )
-    if strategy == "auto":
-        from ..telemetry import skew_report
-
-        bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
-        # evict the PREVIOUS call's probe cache — but only when its plan
-        # DIFFERS from this call's: the persist must outlive this call's
-        # result materialization (the band rows feed both the probe and
-        # the main path) so it cannot be unpersisted here, and keeping
-        # every historical handle leaked one cached band table per
-        # distinct input for the life of the session.  For an IDENTICAL
-        # plan (repeated batches over the same input), Spark's cache
-        # manager maps the new persist to the existing cached relation
-        # anyway — unpersisting it would evict the relation mid-reuse.
-        # Net: at most one cached band table per distinct input stream.
-        prior = getattr(novelty_batch, "_last_bands", None)
-        if prior is not None:
-            try:
-                same = (
-                    prior._jdf.queryExecution().analyzed().semanticHash()
-                    == bands._jdf.queryExecution().analyzed().semanticHash()
-                )
-                if not same:
-                    prior.unpersist()
-            except Exception:
-                pass
-        novelty_batch._last_bands = bands
-        rep = skew_report(
-            bands.select(F.concat_ws("\x00", "band", "key").alias("__bk")),
-            "__bk",
-            top_n=1,
-        )
-        hot = (
-            rep["max"] >= NOVELTY_SKEW_MIN_MAX
-            and rep["skew_ratio"] >= NOVELTY_SKEW_RATIO
-        )
-        strategy = "agg" if hot else "window"
-        # observability hook (bench/tests assert the switch engages)
-        novelty_batch.last_auto = strategy
-    if strategy == "window":
-        w = Window.partitionBy("band", "key").orderBy("ts", "doc_id")
-        firsts = bands.withColumn("__rn", F.row_number().over(w))
-        won = firsts.withColumn("__w", (F.col("__rn") == 1).cast("int"))
-    elif strategy == "agg":
-        min_ts = bands.groupBy("band", "key").agg(F.min("ts").alias("__mts"))
-        winner = (
-            bands.join(min_ts, ["band", "key"])
-            .filter(F.col("ts") == F.col("__mts"))
-            .groupBy("band", "key")
-            .agg(F.min("doc_id").alias("__wid"))
-        )
-        # doc_ids are unique, so doc_id == __wid identifies the winner
-        # row without re-testing ts
-        won = bands.join(winner, ["band", "key"]).withColumn(
-            "__w", (F.col("doc_id") == F.col("__wid")).cast("int")
-        )
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
+    won = bands.groupBy("band", "key").agg(F.min("__a").alias("__w"))
     ok = (
-        won.groupBy("doc_id")
-        .agg(F.count("*").alias("__n"), F.sum("__w").alias("__won"))
-        .filter(F.col("__n") == F.col("__won"))
-        .select("doc_id")
+        won.groupBy("__w")
+        .count()
+        .filter(F.col("count") == N_BANDS)
+        .select("__w.doc_id", "__w.ts")
     )
-    short = _short_docs(docs, text_col).select("doc_id")
-    return docs.join(ok.unionByName(short), "doc_id").select("doc_id", "ts")
+    short = _short_docs(docs, text_col).select("doc_id", "ts")
+    return ok.unionByName(short)
 
 
 def streaming_novelty(

@@ -163,7 +163,11 @@ def dedup_batch(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
     return (
         fp.join(winners, "fingerprint")
-        .filter((F.col("ts") == F.col("__w.ts")) & (F.col("doc_id") == F.col("__w.doc_id")))
+        # null-safe: a NULL ts ranks first and may be the winner's ts
+        .filter(
+            F.col("ts").eqNullSafe(F.col("__w.ts"))
+            & (F.col("doc_id") == F.col("__w.doc_id"))
+        )
         .drop("__w")
         .select(*fp.columns)
     )

@@ -44,9 +44,10 @@ CHECKS = {
     # band equi-joins + canonical-band emit: no all-pairs, no distinct
     # exchange, Hamming filter in codegen
     "simhash_pairs": ([], ["CartesianProduct", "Python", "SortAggregate"]),
-    # per-row HOF signatures + first-arrival windows: zero Python,
-    # no join at all (bands -> window -> hash-agg)
-    "novelty_docs": ([], ["Python", "CartesianProduct", "BroadcastNestedLoopJoin"]),
+    # first arrival per band key is one min(struct(ts, doc_id))
+    # aggregation, then a count of keys won per winner: zero Python and
+    # no Window (bands -> aggregate -> aggregate)
+    "novelty_docs": ([], ["Python", "Window", "CartesianProduct", "BroadcastNestedLoopJoin"]),
     # README-idiom aggregate: broadcast cell join + (round 4) codegen'd
     # rect covers+area refine + ONE partial-aggregating shuffle —
     # zero Python STAGES (the bare "Python" token would false-positive

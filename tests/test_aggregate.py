@@ -4,6 +4,7 @@ The assign+sum path is oracle-gated by the driver (`aggregate_rects`);
 these cover the pieces the oracle can't see.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from maup_spark import disaggregate_by_weight, progress
@@ -166,46 +167,36 @@ def test_profile_table_nulls_and_approx(spark):
 
 
 def test_strategy_parity_hot_groups(spark):
-    """The round-5 skew-safe "agg" twins must equal the window shape
-    exactly, including on a HOT group (one key holding most rows) —
-    normalize, disaggregate_by_weight; dedup_batch (agg only) must pick
-    the hot group's minimum (ts, doc_id)."""
+    """On a HOT group (one key holding most rows), normalize and
+    disaggregate_by_weight must equal shares computed in Python
+    (w / Σw and pop · w / Σw); dedup_batch must pick the hot group's
+    minimum (ts, doc_id), with a NULL ts ranking first."""
     from maup_spark.operators.normalize import normalize
     from maup_spark.streaming.twins import dedup_batch
 
     rows = [(1, i, float(i % 7) + 1.0) for i in range(400)]  # hot target 1
     rows += [(t, 1000 + t, 2.5) for t in range(2, 12)]
     asg = spark.createDataFrame(rows, "target_id bigint, source_id bigint, w double")
+    wsum = {}
+    for t, _, w in rows:
+        wsum[t] = wsum.get(t, 0.0) + w
 
-    for level in ("target_id",):
-        a = sorted(
-            tuple(r)
-            for r in normalize(asg, level=level, weight_col="w", out_col="n",
-                               strategy="agg").collect()
-        )
-        b = sorted(
-            tuple(r)
-            for r in normalize(asg, level=level, weight_col="w", out_col="n",
-                               strategy="window").collect()
-        )
-        assert a == b
+    got = {
+        r["source_id"]: r["n"]
+        for r in normalize(asg, level="target_id", weight_col="w", out_col="n").collect()
+    }
+    assert got == pytest.approx({s: w / wsum[t] for t, s, w in rows}, rel=1e-12)
 
     tg = spark.createDataFrame(
         [(t, 100.0 * t) for t in range(1, 12)], "target_id bigint, pop double"
     )
-    from maup_spark.operators.aggregate import disaggregate_by_weight
-
-    a = sorted(
-        tuple(r)
-        for r in disaggregate_by_weight(tg, asg, ["pop"], "w",
-                                        strategy="agg").collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in disaggregate_by_weight(tg, asg, ["pop"], "w",
-                                        strategy="window").collect()
-    )
-    assert a == b and len(a) == 410
+    got = {
+        (r["source_id"], r["target_id"]): r["pop_part"]
+        for r in disaggregate_by_weight(tg, asg, ["pop"], "w").collect()
+    }
+    want = {(s, t): 100.0 * t * w / wsum[t] for t, s, w in rows}
+    assert len(got) == 410
+    assert got == pytest.approx(want, rel=1e-12)
 
     docs = spark.createDataFrame(
         [(i, float(i % 5), "same text" if i < 300 else f"uniq {i}")
@@ -216,3 +207,9 @@ def test_strategy_parity_hot_groups(spark):
     assert len(got) == 31  # 1 winner for the hot text + 30 uniques
     # the hot text's winner is the minimum (ts, doc_id) = (0, 0)
     assert [r["doc_id"] for r in got if r["text"] == "same text"] == [0]
+    # a NULL ts ranks first and its group keeps that winner
+    docs = spark.createDataFrame(
+        [(1, None, "same text"), (2, 5.0, "same text"), (3, 1.0, "other")],
+        "doc_id bigint, ts double, text string",
+    ).selectExpr("doc_id", "CAST(ts AS TIMESTAMP) AS ts", "text")
+    assert sorted(r["doc_id"] for r in dedup_batch(docs).collect()) == [1, 3]

@@ -4,6 +4,8 @@ microbatch)."""
 
 import shutil
 
+import pytest
+
 
 def test_streaming_assign_matches_batch(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
@@ -199,34 +201,20 @@ def test_streaming_novelty_matches_batch(spark, tmp_path):
     assert all(i in got for i in range(60) if i % 2 == 1 and i not in (13, 33))
 
 
-def test_novelty_batch_strategies_identical(spark, sf_dir):
-    """agg-based first-arrival (hash aggs, skew-immune) must equal the
-    window formulation exactly — including ts tie-breaks."""
+def _novelty_input(spark, sf_dir, shape):
     from pyspark.sql import functions as F
 
     from maup_spark.queries import _corpus
-    from maup_spark.streaming.novelty import novelty_batch
 
-    docs = _corpus(spark, sf_dir).withColumn("ts", F.col("doc_id") % 97)
-    a = {r["doc_id"] for r in novelty_batch(docs, strategy="agg").collect()}
-    w = {r["doc_id"] for r in novelty_batch(docs, strategy="window").collect()}
-    assert a == w and a
-    # auto on a near-distinct-key corpus: picks window, same output
-    u = {r["doc_id"] for r in novelty_batch(docs, strategy="auto").collect()}
-    assert u == w
-    assert novelty_batch.last_auto == "window"
-
-
-def test_novelty_auto_engages_agg_on_hot_band(spark):
-    """Forced boilerplate: thousands of docs share one shingle set, so
-    one band key dwarfs the mean and auto must flip to the skew-robust
-    agg strategy — with output identical to the window formulation."""
-    from pyspark.sql import functions as F
-
-    from maup_spark.streaming.novelty import novelty_batch
-
+    if shape == "ts_mod97":  # many ts ties, broken by doc_id
+        return _corpus(spark, sf_dir).withColumn("ts", F.col("doc_id") % 97)
+    if shape == "null_ts":  # every 5th ts value NULL: it ranks first
+        ts = F.col("doc_id") % 97
+        return _corpus(spark, sf_dir).withColumn("ts", F.when(ts % 5 != 0, ts))
+    # hot_band: thousands of docs share one shingle set, so four band
+    # keys each hold 90% of the rows
     boiler = "the same cookie banner text appears on every single page"
-    docs = spark.range(8000).select(
+    return spark.range(8000).select(
         F.col("id").alias("doc_id"),
         (F.col("id") % 13).alias("ts"),
         F.when(F.col("id") % 10 < 9, F.lit(boiler))
@@ -234,10 +222,37 @@ def test_novelty_auto_engages_agg_on_hot_band(spark):
                             F.lit(" with distinct words and padding")))
         .alias("text"),
     )
-    auto = {r["doc_id"] for r in novelty_batch(docs, strategy="auto").collect()}
-    assert novelty_batch.last_auto == "agg"
-    win = {r["doc_id"] for r in novelty_batch(docs, strategy="window").collect()}
-    assert auto == win and auto
+
+
+@pytest.mark.parametrize("shape", ["ts_mod97", "null_ts", "hot_band"])
+def test_novelty_batch_matches_first_arrival_reference(spark, sf_dir, shape):
+    """novelty_batch == a pure-Python strict first-arrival reference over
+    the same band keys: a doc is novel iff it is the minimum (ts,
+    doc_id) — NULL ts first — of every one of its (band, key) groups;
+    docs too short to shingle are always novel."""
+    from maup_spark.streaming.novelty import _band_rows, _short_docs, novelty_batch
+
+    docs = _novelty_input(spark, sf_dir, shape)
+    first, bands_of = {}, {}
+    for r in _band_rows(docs).collect():
+        bk, rank = (r["band"], r["key"]), (r["ts"] is not None, r["ts"] or 0, r["doc_id"])
+        first[bk] = min(first.get(bk, rank), rank)
+        bands_of.setdefault((r["doc_id"], r["ts"]), []).append(bk)
+    want = {d for d, bks in bands_of.items() if all(first[bk][2] == d[0] for bk in bks)}
+    want |= {(r["doc_id"], r["ts"]) for r in _short_docs(docs).collect()}
+
+    got = [(r["doc_id"], r["ts"]) for r in novelty_batch(docs).collect()]
+    assert sorted(got, key=str) == sorted(want, key=str) and want
+
+
+def test_novelty_batch_leaves_no_cache(spark, sf_dir, cache_entries):
+    from maup_spark.streaming.novelty import novelty_batch
+
+    # from an empty cache: a leak evicted by the next call still shows
+    spark.catalog.clearCache()
+    before = cache_entries()
+    assert novelty_batch(_novelty_input(spark, sf_dir, "ts_mod97")).count() > 0
+    assert cache_entries() == before
 
 
 def test_streaming_profile_merges_to_batch_exact(spark, tmp_path):
